@@ -65,10 +65,11 @@ object Dedup {
     // buildFpIndex call. Probed via the Hadoop FileSystem API so the
     // index can live where a 100 TB seen-set actually lives (HDFS/S3);
     // a java.io.File probe would silently read any non-local index as
-    // empty and readmit every historical duplicate.
-    val idx = {
-      if (graft.sources.Fs.hasParquet(spark, dir)) spark.read.parquet(dir)
-      else spark.createDataFrame(
+    // empty and readmit every historical duplicate. The schema comes
+    // from one footer (memoized), so a batch pays no inference job.
+    val idx = graft.sources.Fs.parquetSchema(spark, dir) match {
+      case Some(schema) => spark.read.schema(schema).parquet(dir)
+      case None => spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         StructType(Seq(StructField("fp", StringType))))
     }
@@ -187,9 +188,10 @@ object Dedup {
                           hasher: Column => Column = portableHasher,
                           updateIndex: Boolean = false): DataFrame = {
     val spark = incoming.sparkSession
-    val idx =
-      if (graft.sources.Fs.hasParquet(spark, dir)) spark.read.parquet(dir)
-      else emptyLshIndex(spark)
+    val idx = graft.sources.Fs.parquetSchema(spark, dir) match {
+      case Some(schema) => spark.read.schema(schema).parquet(dir)
+      case None => emptyLshIndex(spark)
+    }
     val (bbuck, survivors0) = neardupProbe(incoming, idCol, textCol, idx,
       threshold, k, bands, hasher)
     // when also appending, materialize so the append and the result

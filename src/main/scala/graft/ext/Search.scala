@@ -1,7 +1,5 @@
 package graft.ext
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.functions.{col, lit}
@@ -28,9 +26,9 @@ import TextAnalysis.{tokens, h60}
   *    back via a broadcastable per-term table.
   *  - `buildIndex`/`searchIndex` persist term-bucketed postings so
   *    repeated queries skip the corpus scan entirely: bucket ids are
-  *    pure functions of the query terms, so Spark prunes every
-  *    non-matching partition statically (same discipline as the
-  *    persisted IVF index).
+  *    pure functions of the query terms, so a query reads only the
+  *    matching bucket dirs (same discipline as the persisted IVF
+  *    index).
   *
   * Determinism: scoring is RATIONAL arithmetic only (the classic BM25
   * `ln((N-df+0.5)/(df+0.5) + 1)` idf is replaced by its argument —
@@ -339,35 +337,15 @@ object Search {
         "appending")
     val segs = graft.sources.Maintenance.listSegments(spark, dir)
     val nBuckets = statsOf(spark, segs)._3
-    // positional layout detection from ONE parquet footer, read
-    // driver-side (schema inference over the partitioned root lists
-    // every bucket dir — a distributed listing job past the discovery
-    // threshold — for a yes/no answer one footer already holds).
-    // Scans SEGMENTS until one with postings is found: an empty first
-    // segment (no bucket= dirs — an empty batch writes only _SUCCESS)
-    // must not silently flip a positional index to non-positional for
-    // every doc appended after it.
-    val conf = spark.sparkContext.hadoopConfiguration
-    val positions = segs.iterator.flatMap { seg =>
-      val root = new org.apache.hadoop.fs.Path(seg + "/postings")
-      val fs = root.getFileSystem(conf)
-      val dirs =
-        try fs.listStatus(root).toSeq
-        catch { case _: java.io.FileNotFoundException => Seq.empty }
-      dirs.filter(s => s.isDirectory &&
-          s.getPath.getName.startsWith("bucket="))
-        .flatMap(d => fs.listStatus(d.getPath).toSeq
-          .filter(_.getPath.getName.endsWith(".parquet")))
-        .headOption
-        .map { f =>
-          val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile
-              .fromStatus(f, conf))
-          try rd.getFooter.getFileMetaData.getSchema
-            .getFields.asScala.exists(_.getName == "positions")
-          finally rd.close()
-        }
-    }.nextOption().getOrElse(false)
+    // positional layout from ONE postings footer (memoized driver-side
+    // read, no listing of every bucket dir). Scans SEGMENTS until one
+    // with postings is found: an empty segment (no bucket= dirs — an
+    // empty batch writes only _SUCCESS) must not silently flip a
+    // positional index to non-positional for every doc appended after
+    // it.
+    val positions = segs.iterator
+      .flatMap(s => graft.sources.Fs.parquetSchema(spark, s + "/postings"))
+      .nextOption().exists(_.fieldNames.contains("positions"))
     val seg = stageSegment(df, idCol, textCol, dir, nBuckets, positions,
       filesPerBucket)
     graft.sources.Maintenance.commitSegment(spark, dir, seg, replace = false)
@@ -383,12 +361,12 @@ object Search {
       graceMs)
 
   /** FOLD the segment list (Lucene's segment merge): `appendIndex`
-    * grows segments unboundedly and every query unions per-segment
-    * stats + postings, so read cost creeps with append count until a
-    * compaction. The fold never re-tokenizes: doc ids are disjoint
-    * across segments (the append contract), so the merged postings ARE
-    * the union of the source postings, and the stats row folds
-    * additively — one staged segment, one manifest commit. Segments a
+    * grows segments unboundedly and every query folds per-segment stats
+    * and reads per-segment bucket dirs, so read cost creeps with append
+    * count until a compaction. The fold never re-tokenizes: doc ids are
+    * disjoint across segments (the append contract), so the merged
+    * postings ARE the union of the source postings, and the stats row
+    * folds additively — one staged segment, one manifest commit. Segments a
     * concurrent append lands mid-fold SURVIVE the commit (the manifest
     * swaps exactly the folded ones); old segments GC via `vacuumIndex`.
     *
@@ -515,18 +493,15 @@ object Search {
       lit(nBuckets).as("n_buckets"))
   }
 
-  /** Memo of one SEGMENT's stats row keyed by the stats files'
-    * (session, path, mtime, length) identity — segment dirs are
-    * immutable once committed (same discipline as the manifest and
-    * Tables.load caches: metadata values, never query results; a
-    * rewritten file misses by identity). Pre-r15 every index query
-    * paid one `.head` Spark job per stats consult plus a broadcast of
-    * the stats row into the scoring plan; the folded values are three
-    * longs the driver can hold and inline as literals.
+  /** Memo of one SEGMENT's stats row keyed by its stats files'
+    * (path, mtime, length) identity alone — segment dirs are immutable
+    * once committed, so a rewritten file misses by identity, and the
+    * values are three session-independent numbers (no SparkSession in
+    * the key: the memo keeps no stopped session alive, and its size cap
+    * evicts no other session's entries).
     */
   private val statsCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), (Long, Long, Int)]()
+    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long, Int)]()
 
   /** The corpus-stats values folded over a segment list: n_docs and
     * sdl are additive; the bucket count must agree across segments (it
@@ -541,13 +516,14 @@ object Search {
       val files = fs.listStatus(root).toSeq
         .filter(_.getPath.getName.endsWith(".parquet"))
         .sortBy(_.getPath.toString)
-      val key = (spark, files.map(f =>
-        s"${f.getPath}#${f.getModificationTime}#${f.getLen}").mkString("|"))
+      val key = files.map(f =>
+        s"${f.getPath}#${f.getModificationTime}#${f.getLen}").mkString("|")
       if (statsCache.size() > 1024) statsCache.clear()
       statsCache.computeIfAbsent(key, _ => {
-        val row = spark.read.parquet(s + "/stats")
-          .select(col("n_docs").cast("long"), col("sdl").cast("long"),
-            col("n_buckets").cast("int"))
+        // the schema every index writer gives stats/: a memo miss reads
+        // it without an inference job
+        val row = spark.read.schema("n_docs bigint, sdl bigint, n_buckets int")
+          .parquet(s + "/stats")
           .agg(F.sum(col("n_docs")), F.sum(col("sdl")),
             F.min(col("n_buckets")), F.max(col("n_buckets"))).head
         require(row.getInt(2) == row.getInt(3),
@@ -561,42 +537,70 @@ object Search {
     (per.map(_._1).sum, per.map(_._2).sum, nb.head)
   }
 
-  /** The pruned postings scan over every live segment: bucket ids are
-    * literal IN-list constants per segment, so partition pruning is
-    * static in each, and the union's cost is ∝ matching postings
-    * across segments, not corpus size.
+  /** Read schema of the postings over every live segment, from one
+    * memoized footer per segment: a column's type must agree across
+    * segments (refused otherwise, naming the segment), and a column
+    * some segments lack reads as NULL there.
+    */
+  private def postingsSchema(spark: SparkSession,
+                             segs: Seq[String]): StructType = {
+    val first = scala.collection.mutable.LinkedHashMap
+      .empty[String, (StructField, String)]
+    for {
+      s <- segs
+      schema <- graft.sources.Fs.parquetSchema(spark, s + "/postings").toSeq
+      f <- schema.fields
+    } first.get(f.name) match {
+      // compared up to nullability: a compacted segment's arrays read
+      // back nullable
+      case Some((g, at)) => require(
+        g.dataType.catalogString == f.dataType.catalogString,
+        s"index segment $s stores ${f.name} as ${f.dataType.catalogString}" +
+          s" but segment $at stores it as ${g.dataType.catalogString}" +
+          " — rebuild the index")
+      case None => first(f.name) = (f, s)
+    }
+    StructType(first.values.map(_._1).toSeq)
+  }
+
+  /** The pruned postings scan over every live segment, as ONE read: the
+    * present `bucket=<b>` dirs of the query's buckets across all
+    * segments, with the schema from the segments' footers — no
+    * per-segment read, no schema-inference job, and no listing of the
+    * other buckets. Cost is ∝ matching postings, not corpus size or
+    * segment count. A bucket dir may not exist in a given segment (no
+    * postings hashed there) — checked driver-side, one getFileStatus
+    * per (segment, bucket). Each call of the returned function builds
+    * a FRESH plan (new exprIds) over the same paths.
     */
   private def prunedPostings(spark: SparkSession, segs: Seq[String],
                              buckets: Seq[Long],
-                             terms: Seq[String]): DataFrame =
-    segs.map { s =>
-      // enumerate the matching bucket DIRS directly instead of scanning
-      // the partitioned root: reading `<seg>/postings` lists every
-      // bucket dir up front (a distributed listing job once the dir
-      // count passes the discovery threshold) only for partition
-      // pruning to discard most of them — the bucket ids are already
-      // plan-time constants, so hand Spark exactly those paths
-      // (basePath keeps `bucket` as a partition column). A bucket dir
-      // may not exist in a given segment (no postings hashed there) —
-      // checked driver-side, one getFileStatus per (segment, bucket).
-      val root = new org.apache.hadoop.fs.Path(s + "/postings")
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val present = buckets.map(b => s"$s/postings/bucket=$b")
-        .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
+                             terms: Seq[String]): () => DataFrame = {
+    val schema = postingsSchema(spark, segs)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val present = for {
+      s <- segs
+      b <- buckets
+      p = new org.apache.hadoop.fs.Path(s"$s/postings/bucket=$b")
+      if p.getFileSystem(conf).exists(p)
+    } yield p.toString
+    () => {
       val df =
         if (present.isEmpty)
-          spark.read.parquet(s + "/postings").limit(0)
-        else spark.read.option("basePath", s + "/postings")
-          .parquet(present: _*)
-      df.filter(col("bucket").isin(buckets: _*) && col("term").isin(terms: _*))
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
+          spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](),
+            schema)
+        else spark.read.schema(schema).parquet(present: _*)
+      df.filter(col("term").isin(terms: _*))
+    }
+  }
 
   /** BM25 top-k over a persisted index — bit-identical scores to
     * `bm25Search` on the source corpus (the parquet round-trip is
-    * lossless and the arithmetic is identical), but the scan touches
-    * ONLY the partitions holding the query's term buckets: bucket ids
-    * are literal IN-list constants, so pruning is static and the cost
-    * is ∝ matching postings, not corpus size.
+    * lossless and the arithmetic is identical), but the scan reads
+    * ONLY the bucket dirs holding the query's terms, all segments in
+    * one scan (`prunedPostings`): bucket ids are pure functions of the
+    * terms, so the cost is ∝ matching postings, not corpus size, and
+    * the job count does not grow with the segment count.
     *
     * Per-doc aggregation pivots each term's (tf, df) into fixed
     * columns (max of a guarded case — at most one posting per
@@ -618,14 +622,14 @@ object Search {
     // bit-identical)
     val (nDocs, sdlV, nBuckets) = statsOf(spark, segs)
     val buckets = terms.map(t => TextAnalysis.h60Value(t) % nBuckets).distinct
-    // `def`: each call builds a FRESH pruned-scan plan, so the df
-    // aggregate below is a sibling branch, not a subplan of the
-    // posting side's own lineage (CLAUDE.md shared-exprId rule)
-    def pruned = prunedPostings(spark, segs, buckets, terms)
-    val post = pruned
+    // each call builds a FRESH pruned-scan plan, so the df aggregate
+    // below is a sibling branch, not a subplan of the posting side's
+    // own lineage (CLAUDE.md shared-exprId rule)
+    val pruned = prunedPostings(spark, segs, buckets, terms)
+    val post = pruned()
     // per-term document frequency from the pruned slice (tiny), then
     // pivot tf/df into fixed per-term columns keyed by doc
-    val dfreq = pruned.groupBy("term").agg(F.count(lit(1)).as("df"))
+    val dfreq = pruned().groupBy("term").agg(F.count(lit(1)).as("df"))
     val joined = post.join(F.broadcast(dfreq), "term")
     val pivoted = joined.groupBy("doc_id")
       .agg(F.max(col("dl")).as("dl"),
@@ -659,8 +663,8 @@ object Search {
 
   /** Exact-phrase retrieval over the persisted index — row-identical
     * to `phraseSearch` on the source corpus, but the scan touches only
-    * the partitions holding the phrase terms' buckets (static IN-list
-    * pruning, like `searchIndex`). Each phrase term's sorted position
+    * the bucket dirs of the phrase terms (static pruning, like
+    * `searchIndex`). Each phrase term's sorted position
     * array pivots into a fixed per-slot column keyed by doc (at most
     * one posting per (doc, term)); the occurrence count is then ONE
     * array expression — starts q in slot-0's positions such that
@@ -676,7 +680,7 @@ object Search {
     val segs = graft.sources.Maintenance.listSegments(spark, dir)
     val nBuckets = statsOf(spark, segs)._3
     val buckets = terms.map(t => TextAnalysis.h60Value(t) % nBuckets).distinct
-    val pruned = prunedPostings(spark, segs, buckets, terms)
+    val pruned = prunedPostings(spark, segs, buckets, terms)()
     require(pruned.columns.contains("positions"),
       s"index at $dir was built with positions = false — phrase " +
         "queries need a positional rebuild")
@@ -711,7 +715,7 @@ object Search {
     val segs = graft.sources.Maintenance.listSegments(spark, dir)
     val nBuckets = statsOf(spark, segs)._3
     val buckets = uniq.map(t => TextAnalysis.h60Value(t) % nBuckets).distinct
-    val pruned = prunedPostings(spark, segs, buckets, uniq)
+    val pruned = prunedPostings(spark, segs, buckets, uniq)()
     require(pruned.columns.contains("positions"),
       s"index at $dir was built with positions = false — proximity " +
         "queries need a positional rebuild")

@@ -1,7 +1,8 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Filesystem probes that resolve through the Hadoop `FileSystem` API,
   * so they work on ANY filesystem Spark can write to (local paths,
@@ -18,14 +19,59 @@ object Fs {
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
-  /** True when `dir` exists and directly contains at least one parquet
-    * part file — the "has this index ever been written?" bootstrap
-    * probe for incremental dedup.
+  /** Footer schemas keyed by the part file's (path, mtime, length)
+    * identity — part files are immutable once written, so a rewritten
+    * file is a new key. No SparkSession in the key: a schema is a value
+    * of the file alone, and the memo must not keep stopped sessions
+    * alive.
     */
-  def hasParquet(spark: SparkSession, dir: String): Boolean = {
-    val (fs, p) = resolve(spark, dir)
-    fs.exists(p) && fs.listStatus(p).exists(s =>
-      s.isFile && s.getPath.getName.endsWith(".parquet"))
+  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
+    (String, Long, Long), StructType]()
+
+  /** Schema of the parquet dataset under `dir`, from the footer of ONE
+    * part file read on the driver — where `spark.read.parquet(dir)`
+    * launches a schema-inference job per call. The part file is the
+    * first found among the files directly in `dir`, then depth-first
+    * through its partition subdirectories (`name=value`, in name
+    * order); partition columns are not in the result (they live in
+    * directory names, not files). None when `dir` holds no part file:
+    * for an incremental dedup index, "nothing seen yet".
+    */
+  def parquetSchema(spark: SparkSession, dir: String): Option[StructType] = {
+    val (fs, root) = resolve(spark, dir)
+    def first(p: Path): Option[FileStatus] = {
+      val st =
+        try fs.listStatus(p)
+        catch {
+          case _: java.io.FileNotFoundException => Array.empty[FileStatus]
+        }
+      st.find(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+        .orElse(st.filter(s => s.isDirectory && s.getPath.getName.contains('='))
+          .sortBy(_.getPath.getName).iterator
+          .flatMap(d => first(d.getPath)).nextOption())
+    }
+    first(root).map { f =>
+      if (schemaCache.size() > 1024) schemaCache.clear()
+      schemaCache.computeIfAbsent(
+        (f.getPath.toString, f.getModificationTime, f.getLen),
+        _ => footerSchema(spark, f))
+    }
+  }
+
+  /** The Spark schema a Spark writer records in the footer (what
+    * Spark's own inference reads); a file some other writer produced
+    * falls back to inference over that one file.
+    */
+  private def footerSchema(spark: SparkSession, f: FileStatus): StructType = {
+    val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile
+        .fromStatus(f, spark.sparkContext.hadoopConfiguration))
+    val recorded =
+      try Option(rd.getFooter.getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata"))
+      finally rd.close()
+    recorded.map(DataType.fromJson(_).asInstanceOf[StructType])
+      .getOrElse(spark.read.parquet(f.getPath.toString).schema)
   }
 
   /** Fully-qualified immediate subdirectories of `dir` whose NAME

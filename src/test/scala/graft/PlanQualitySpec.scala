@@ -1030,10 +1030,28 @@ class PlanQualitySpec extends SparkSpec {
       s"scan must prune to (doc_id, text):\n$p")
   }
 
+  /** Asserts that every postings scan of `df` reads only the bucket
+    * dirs the query `terms` hash to (default 64 buckets) — the static
+    * pruning of the persisted index — and returns the plan string.
+    */
+  private def bucketDirScan(df: org.apache.spark.sql.DataFrame,
+                            terms: Seq[String]): String = {
+    val p = df.queryExecution.executedPlan.toString
+    val want = terms.map(t => graft.ext.TextAnalysis.h60Value(t) % 64).toSet
+    val roots = df.queryExecution.sparkPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+        s.relation.location.rootPaths.map(_.toString)
+    }.flatten
+    assert(roots.nonEmpty && roots.forall(r =>
+      ".*/postings/bucket=(\\d+)$".r.findFirstMatchIn(r)
+        .exists(m => want(m.group(1).toLong))),
+      s"query-term buckets must prune the postings statically: $roots\n$p")
+    p
+  }
+
   test("index search: static bucket pruning + term pushdown") {
-    val p = planOf("x61_index_search")
-    assert(p.contains("PartitionFilters: [bucket"),
-      s"query-term buckets must prune partitions statically:\n$p")
+    val p = bucketDirScan(SparkEntry.queries("x61_index_search")(spark, sf),
+      Seq("customer", "window"))
     assert(p.contains("PushedFilters: [In(term"),
       s"term IN-list must push into the postings scan:\n$p")
     assert(p.contains("BroadcastHashJoin"),
@@ -1051,9 +1069,8 @@ class PlanQualitySpec extends SparkSpec {
   }
 
   test("phrase index: static bucket pruning + term pushdown, no corpus scan") {
-    val p = planOf("x119_phrase_index")
-    assert(p.contains("PartitionFilters: [bucket"),
-      s"phrase-term buckets must prune partitions statically:\n$p")
+    val p = bucketDirScan(SparkEntry.queries("x119_phrase_index")(spark, sf),
+      Seq("value", "table", "part"))
     assert(p.contains("PushedFilters: [In(term"),
       s"term IN-list must push into the postings scan:\n$p")
   }

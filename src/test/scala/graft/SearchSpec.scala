@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import graft.ext.Search
 import graft.plans.FreqSketch
@@ -83,6 +85,148 @@ class SearchSpec extends SparkSpec {
     }
   }
 
+  /** The search plan over the index at `dir` reads the postings in
+    * exactly two scans (the postings and the df fold) whatever the
+    * segment count, and its files lie only in the query terms' bucket
+    * dirs of `segments` distinct segments.
+    */
+  private def assertPrunedScan(dir: String, terms: Seq[String],
+                               nBuckets: Int, segments: Int): Unit = {
+    val q = Search.searchIndex(spark, dir, terms, 30)
+    val plan = q.queryExecution.executedPlan.toString
+    val nScans = "FileScan parquet".r.findAllIn(plan).size
+    assert(nScans == 2, s"$nScans postings scans\n$plan")
+    val want = terms.map(t =>
+      graft.ext.TextAnalysis.h60Value(t) % nBuckets).toSet
+    val read = q.inputFiles.toSeq.map { f =>
+      val m = ".*/(s[^/]+)/postings/bucket=(\\d+)/[^/]+$".r
+        .findFirstMatchIn(f).getOrElse(fail(s"not a postings file: $f"))
+      (m.group(1), m.group(2).toLong)
+    }
+    assert(read.map(_._2).toSet.subsetOf(want),
+      s"read buckets ${read.map(_._2).toSet}, query buckets $want")
+    assert(read.map(_._1).toSet.size == segments)
+  }
+
+  /** Runs `body` and returns its result with the first-stage names of
+    * the Spark jobs it ran.
+    */
+  private def withJobs[T](body: => T): (T, Seq[String]) = {
+    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        names.add(js.stageInfos.headOption.map(_.name).getOrElse(""))
+    }
+    org.apache.spark.ListenerDrain.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.ListenerDrain.drain(spark.sparkContext)
+      (out, names.asScala.toSeq)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("searchIndex runs the same jobs at 1 and 4 segments, none of them schema inference") {
+    val one = java.nio.file.Files.createTempDirectory("graft_jobs1").toString
+    val four = java.nio.file.Files.createTempDirectory("graft_jobs4").toString
+    try {
+      Search.buildIndex(docs, "doc_id", "text", one, nBuckets = 16)
+      Search.buildIndex(docs.filter(col("doc_id") % 4 === 0), "doc_id",
+        "text", four, nBuckets = 16)
+      (1 to 3).foreach(r => Search.appendIndex(
+        docs.filter(col("doc_id") % 4 === r), "doc_id", "text", four))
+      assert(graft.sources.Maintenance.listSegments(spark, four).size == 4)
+      val terms = Seq("customer", "window", "spark")
+      val direct = Search.bm25Search(docs, "doc_id", "text", terms, 30)
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      def search(dir: String) = withJobs(Search.searchIndex(spark, dir,
+        terms, 30).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq)
+      // the first search of an index also reads its stats (one job per
+      // segment, memoized after); the second is the steady state
+      val runs = Seq(one, four).map(d => (search(d), search(d)))
+      for (((cold, coldJobs), (warm, warmJobs)) <- runs) {
+        assert(cold == direct && warm == direct)
+        // a schema-inference job is named after the parquet() call
+        assert(!(coldJobs ++ warmJobs).exists(_.startsWith("parquet at")),
+          s"schema-inference jobs: ${coldJobs ++ warmJobs}")
+      }
+      val Seq(oneJobs, fourJobs) = runs.map(_._2._2)
+      assert(oneJobs.nonEmpty && oneJobs.size == fourJobs.size,
+        s"1 segment: $oneJobs; 4 segments: $fourJobs")
+    } finally Seq(one, four).foreach(d =>
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
+  }
+
+  test("searchIndex: terms hashing only to absent bucket dirs match nothing") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_absent").toString
+    try {
+      Search.buildIndex(Seq((1L, "alpha beta"), (2L, "beta gamma"))
+        .toDF("id", "text"), "id", "text", dir, nBuckets = 64)
+      val seg = graft.sources.Maintenance.listSegments(spark, dir).head
+      def absent(t: String) = !new java.io.File(
+        s"$seg/postings/bucket=${graft.ext.TextAnalysis.h60Value(t) % 64}")
+        .exists
+      val terms = Iterator.from(0).map(i => s"zz$i").filter(absent).take(2)
+        .toSeq
+      assert(Search.searchIndex(spark, dir, terms, 10).collect().isEmpty)
+      assert(Search.phraseSearchIndex(spark, dir, terms).collect().isEmpty)
+      // a present bucket still answers next to an absent one
+      assert(Search.searchIndex(spark, dir, terms :+ "gamma", 10)
+        .collect().map(_.getLong(0)).toSeq == Seq(2L))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(dir))
+  }
+
+  test("searchIndex refuses segments that disagree on the doc_id type, naming the segment") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_mixedid")
+      .toString
+    try {
+      Search.buildIndex(Seq((1L, "alpha beta")).toDF("id", "text"), "id",
+        "text", dir, nBuckets = 4)
+      Search.appendIndex(Seq(("two", "beta gamma")).toDF("id", "text"),
+        "id", "text", dir)
+      val added = graft.sources.Maintenance.listSegments(spark, dir).last
+      val err = intercept[IllegalArgumentException] {
+        Search.searchIndex(spark, dir, Seq("beta"), 10)
+      }
+      assert(err.getMessage.contains(added) &&
+        err.getMessage.contains("doc_id"), err.getMessage)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(dir))
+  }
+
+  test("Fs.parquetSchema: one footer, partition dirs descended, a rewritten file misses the memo") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_fsschema")
+      .toString
+    try {
+      val Fs = graft.sources.Fs
+      assert(Fs.parquetSchema(spark, s"$dir/missing").isEmpty)
+      Seq((1, "x")).toDF("a", "p").write.partitionBy("p")
+        .parquet(s"$dir/parted")
+      // the partition column lives in the dir name, not the file
+      assert(Fs.parquetSchema(spark, s"$dir/parted").map(_.fieldNames.toSeq)
+        .contains(Seq("a")))
+      Seq(1L).toDF("a").coalesce(1).write.parquet(s"$dir/t")
+      assert(Fs.parquetSchema(spark, s"$dir/t").map(_.simpleString)
+        .contains("struct<a:bigint>"))
+      // same path, new bytes: the file's (path, mtime, length) identity
+      // changed, so the memo must not answer with the old schema
+      Seq("s").toDF("b").coalesce(1).write.parquet(s"$dir/u")
+      def part(d: String) = new java.io.File(d).listFiles
+        .filter(_.getName.endsWith(".parquet")).head
+      val target = part(s"$dir/t")
+      val mtime = target.lastModified()
+      java.nio.file.Files.copy(part(s"$dir/u").toPath, target.toPath,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      new java.io.File(target.getParent, s".${target.getName}.crc").delete()
+      target.setLastModified(mtime + 10000)
+      assert(Fs.parquetSchema(spark, s"$dir/t").map(_.simpleString)
+        .contains("struct<b:string>"))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(dir))
+  }
+
   test("appendIndex: grown index == full-corpus scan, segments immutable, rebuild + vacuum") {
     val dir = java.nio.file.Files.createTempDirectory("graft_appendidx")
       .toString
@@ -108,19 +252,9 @@ class SearchSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getInt(1))).toSet ==
         Search.phraseSearch(docs, "doc_id", "text", Seq("scan", "query"))
           .collect().map(r => (r.getLong(0), r.getInt(1))).toSet)
-      // static pruning holds across segments: EVERY postings scan in
-      // the executed plan (one per segment) carries the bucket
-      // partition filter (inputFiles can't show this — it lists the
-      // relation's files before partition pruning applies)
-      val plan = Search.searchIndex(spark, dir, terms, 30)
-        .queryExecution.executedPlan.toString
-      // 2 segments × 2 branches (postings + the df fold) = 4 postings
-      // scans, EVERY one carrying the bucket partition filter (the
-      // Location: line truncates at ~100 chars, so scans are counted
-      // by their filters, not their paths)
-      val nPruned = "PartitionFilters: \\[bucket".r.findAllIn(plan).size
-      assert(nPruned == 4,
-        s"append broke pruning: $nPruned pruned postings scans\n$plan")
+      // pruning holds across segments, in ONE scan per branch: both
+      // segments are read, but only the query terms' bucket dirs
+      assertPrunedScan(dir, terms, 16, segments = 2)
       // a rebuild REPLACES the segment list; vacuum reclaims the old
       // segments and the rebuilt index still answers identically
       Search.buildIndex(docs, "doc_id", "text", dir, nBuckets = 8,
@@ -189,10 +323,7 @@ class SearchSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getInt(1))).toSet ==
         Search.phraseSearch(docs, "doc_id", "text", Seq("scan", "query"))
           .collect().map(r => (r.getLong(0), r.getInt(1))).toSet)
-      val plan = Search.searchIndex(spark, dir, terms, 30)
-        .queryExecution.executedPlan.toString
-      // 1 segment × 2 branches, both bucket-pruned
-      assert("PartitionFilters: \\[bucket".r.findAllIn(plan).size == 2)
+      assertPrunedScan(dir, terms, 16, segments = 1)
       // policy no-op below minSegments; vacuum reclaims folded segments
       val v = M.manifestVersions(spark, dir).last
       Search.compactIndex(spark, dir)
